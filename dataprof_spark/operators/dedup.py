@@ -226,6 +226,30 @@ def minhash_bands(sig: Column, n_bands: int = N_BANDS_DEFAULT,
     return _bind_once(sig, bands_from)
 
 
+def _band_table(
+    df: DataFrame, id_col: str, text_col: str, n_perm: int, n_bands: int
+) -> DataFrame:
+    """(id, band_idx, band_hash): one row per (document, band).
+
+    ``posexplode_outer``, not ``posexplode``: for a non-outer
+    generator Catalyst's InferFiltersFromGenerate adds
+    ``isnotnull(bands) AND size(bands) > 0`` and pushes it below the
+    projection, and that Filter would compute the whole shingle →
+    minhash → band expression a second time per document. The rule
+    skips outer generators. ``bands`` always holds exactly
+    ``n_bands`` md5 strings (empty or NULL text gets sentinel
+    signatures), so the outer form emits the same rows."""
+    sig = df.select(
+        F.col(id_col).alias("id"),
+        minhash_bands(
+            minhash_signature(F.col(text_col), n_perm), n_bands, n_perm
+        ).alias("bands"),
+    )
+    return sig.select(
+        "id", F.posexplode_outer("bands").alias("band_idx", "band_hash")
+    )
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -284,18 +308,13 @@ def lsh_candidate_pairs(
     bucket-stats TAG join when its runtime size is small — that is
     the safe direction: a runtime size check, not a hint, so it
     degrades to a shuffle join at scale.)
+
+    The signature projection runs once per document: the band table
+    (_band_table) explodes with an outer generator so Catalyst infers
+    no filter that would evaluate it a second time.
     """
-    sig = df.select(
-        F.col(id_col).alias("id"),
-        minhash_bands(
-            minhash_signature(F.col(text_col), n_perm), n_bands, n_perm
-        ).alias("bands"),
-    )
     exploded = _cut_lineage(
-        sig.select(
-            "id", F.posexplode("bands").alias("band_idx", "band_hash")
-        ),
-        reliable,
+        _band_table(df, id_col, text_col, n_perm, n_bands), reliable
     )
     stats = exploded.groupBy("band_idx", "band_hash").agg(
         F.count("*").alias("bsz"), F.min("id").alias("hub")
@@ -387,6 +406,14 @@ def ngram_jaccard_pairs(
     recomputing lineage); acceptable for a batch demotion pass whose
     caller retries the stage, and it is exactly what keeps the
     downstream join planner working with the TRUE verified-pair size.
+
+    AQE leaves a cached plan's output partitioning alone unless
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is
+    on (off by default in Spark 4.1). With it off, the persisted
+    ``pairs``, their count and the verify stage each run
+    ``spark.sql.shuffle.partitions`` tasks, which is 200 under a plain
+    spark-submit. ``session.get_spark`` turns it on, so AQE coalesces
+    the cached plan's final shuffle like any other.
     """
     if materialize:
         from pyspark import StorageLevel

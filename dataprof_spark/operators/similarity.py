@@ -248,7 +248,8 @@ def embedding_near_dup_pairs(
     (embedding-cosine dedup for training corpora).
 
     n_planes=None derives the plane count from the corpus size
-    (auto_n_planes — one count() job).
+    (auto_n_planes — one count() job, shared with the "auto" cap
+    below).
 
     The within-bucket self-join is quadratic in bucket population, so
     one boilerplate-heavy bucket (near-identical template pages all
@@ -271,15 +272,21 @@ def embedding_near_dup_pairs(
     cap 250; sf1.0: max 569 vs cap 2500 — embedding_near_dups output
     provably unchanged) while a degenerate template bucket (≫ 8× avg
     by definition) is split exactly where the quadratic blowup lives.
-    Costs one count() job when armed. Pass an int to pin the cap, or
-    None to disable (the pre-r8 default).
+    Costs one count() job when armed (the same one n_planes=None
+    uses). Pass an int to pin the cap, or None to disable (the pre-r8
+    default).
 
     r8: the bucketed projection is checkpointed before the self-join —
     the a/b aliases otherwise carry the scan (and the guard's
     count-over-bucket window) TWICE, the same hidden-double-subtree
     shape r7/r8 fixed in lsh_candidate_pairs and simhash_pairs."""
+    n_docs = (
+        df.count()
+        if n_planes is None or max_bucket_size == "auto"
+        else None
+    )
     if n_planes is None:
-        n_planes = auto_n_planes(df.count())
+        n_planes = auto_n_planes(n_docs)
     planes = hyperplanes(dim, n_planes)
     v = df.select(
         F.col(id_col).alias("id"),
@@ -288,7 +295,7 @@ def embedding_near_dup_pairs(
     )
     if max_bucket_size == "auto":
         max_bucket_size = max(
-            64, math.ceil(8 * df.count() / (1 << n_planes))
+            64, math.ceil(8 * n_docs / (1 << n_planes))
         )
     if max_bucket_size is not None:
         sub = hyperplanes(dim, refine_planes, seed=config.SEED + 1)

@@ -19,6 +19,18 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Build (or join) the session with the engine's defaults.
+
+    Plain-python embedding (tests, bench, notebooks) launches the JVM
+    here, so master, shuffle partitions and ``spark.driver.memory``
+    (``SPARK_DRIVER_MEM``, default 8g) are defaulted. Under
+    spark-submit the driver JVM is already running when this is
+    called, so a ``spark.driver.memory`` set now would only be
+    recorded in the conf (it read 8g while the driver heap stayed at
+    spark-submit's 1g default). None of the three is set then; they
+    come from the submit line (``--driver-memory``) or the cluster
+    defaults.
+    ``extra_conf`` entries are applied last and win."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Under spark-submit the driver connects to the launcher's JVM
     # gateway (PythonRunner exports PYSPARK_GATEWAY_PORT): master and
@@ -38,11 +50,23 @@ def get_spark(
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)
         )
+    if not submitted:
+        builder = builder.config(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g")
+        )
     builder = (
         builder
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce the final shuffle of a cached plan too (off
+        # by default): otherwise a persisted DataFrame such as the
+        # near-dup candidate pairs, and every stage reading it, runs
+        # spark.sql.shuffle.partitions tasks (200 under spark-submit).
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+            "true",
+        )
         # r8 (guide §3.1/§9): let the planner pick shuffled-hash over
         # sort-merge when its size conditions hold (skips two sorts),
         # and let AQE rewrite SMJ→SHJ at runtime when every post-
@@ -57,7 +81,6 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -290,3 +290,49 @@ def test_reliable_checkpoint_path(spark, tmp_path):
     assert sp == {
         tuple(r) for r in dedup.simhash_pairs(docs).collect()
     }
+
+
+def test_band_table_evaluates_signature_once(docs):
+    """The band table's executed plan computes the MinHash signature
+    in one place. With a non-outer posexplode, Catalyst infers
+    ``size(bands) > 0`` below the projection and that Filter carries a
+    second copy of the shingle → minhash → band expression, so every
+    hash-family constant would appear more than once."""
+    import re
+
+    a0 = dedup._hash_family(dedup.N_PERM_DEFAULT)[0][0]
+    bands = dedup._band_table(
+        docs, "doc_id", "text", dedup.N_PERM_DEFAULT, dedup.N_BANDS_DEFAULT
+    )
+    plan = bands._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(rf"\b{a0}\b", plan)) == 1
+    # one row per (document, band), as the non-outer explode gave
+    assert bands.count() == docs.count() * dedup.N_BANDS_DEFAULT
+
+
+def test_near_dup_cached_pairs_coalesce(spark, docs):
+    """At spark-submit's default of 200 shuffle partitions, AQE
+    coalesces every stage of the near-dup pass, the persisted
+    candidate pairs and the stages reading them included
+    (session.get_spark enables canChangeCachedPlanOutputPartitioning),
+    so no stage runs 200 tasks on a five-document corpus."""
+    sc = spark.sparkContext
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    group = "near_dup_cached_pairs_coalesce"
+    spark.conf.set(key, "200")
+    sc.setJobGroup(group, group)
+    try:
+        got = dedup.near_dup_minhash(docs, threshold=0.5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, before)
+    assert {(r["id_a"], r["id_b"]) for r in got} >= {(0, 3), (0, 1)}
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(s)
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    ran = [s.numCompletedTasks for s in stages if s is not None]
+    assert ran and max(ran) < 200, ran

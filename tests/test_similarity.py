@@ -290,3 +290,22 @@ def test_near_dup_guard_auto_default(spark):
     dup_pairs = {(a, b) for a in range(600) for b in range(600) if a < b}
     assert dup_pairs <= guarded
     assert guarded <= unguarded
+
+
+def test_near_dup_auto_planes_and_cap_count_once(spark, monkeypatch):
+    """n_planes=None and max_bucket_size="auto" both need the corpus
+    size; the corpus is counted once and the value reused."""
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.standard_normal(64).tolist()) for i in range(50)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    calls = []
+    cls = type(df)
+    real_count = cls.count
+
+    def counting(self):
+        calls.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(cls, "count", counting)
+    similarity.embedding_near_dup_pairs(df, threshold=0.99, n_planes=None)
+    assert len(calls) == 1
