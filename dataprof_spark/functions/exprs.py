@@ -101,11 +101,6 @@ def stopword_count(c: Column) -> Column:
     ).cast("long")
 
 
-def stopword_ratio(c: Column) -> Column:
-    wc = word_count(c)
-    return F.when(wc > 0, stopword_count(c) / wc).otherwise(F.lit(0.0))
-
-
 def line_count(c: Column) -> Column:
     return F.size(F.split(c, "\n", -1)).cast("long")
 
@@ -147,6 +142,39 @@ def ipv4_count(c: Column) -> Column:
     return F.regexp_count(c, F.lit(IPV4_PAT)).cast("long")
 
 
+def _gate_cascade(
+    moji: Column, wc: Column, mwl: Column, symr: Column,
+    ell: Column, stop: Column, dupf: Column, eng: Column,
+) -> Column:
+    """The 7-gate heuristic cascade over precomputed signal columns:
+    first failing gate's name, NULL when all pass. Order and thresholds
+    are core.gates.heuristic_reason's; the callers decide how each
+    signal is evaluated (lazily per branch, or once into a struct)."""
+    return (
+        F.when(moji > 0, F.lit("garbled_encoding"))
+        .when(wc < config.MIN_WORDS, F.lit("too_short"))
+        .when(
+            (mwl < config.MEAN_WORD_LEN_MIN)
+            | (mwl > config.MEAN_WORD_LEN_MAX),
+            F.lit("mean_word_length"),
+        )
+        .when(symr > config.MAX_SYMBOL_RATIO, F.lit("symbol_ratio"))
+        .when(
+            ell / wc > config.MAX_ELLIPSIS_PER_WORD,
+            F.lit("ellipsis_ratio"),
+        )
+        .when(
+            eng & (stop < config.MIN_STOPWORD_COUNT),
+            F.lit("stopword_ratio"),
+        )
+        .when(
+            dupf > config.MAX_DUP_LINE_FRACTION,
+            F.lit("dup_line_fraction"),
+        )
+        .otherwise(F.lit(None).cast("string"))
+    )
+
+
 def heuristic_reason(c: Column, *, english: Column | bool = True) -> Column:
     """First-failing-gate drop reason (native twin of
     core.gates.heuristic_reason); NULL when the document passes.
@@ -178,31 +206,9 @@ def heuristic_reason(c: Column, *, english: Column | bool = True) -> Column:
         stopwords = F.size(
             F.filter(ws, lambda x: x.isin(*config.STOPWORDS_EN))
         ).cast("long")
-        return (
-            F.when(mojibake_count(t) > 0, F.lit("garbled_encoding"))
-            .when(wc < config.MIN_WORDS, F.lit("too_short"))
-            .when(
-                (mwl < config.MEAN_WORD_LEN_MIN)
-                | (mwl > config.MEAN_WORD_LEN_MAX),
-                F.lit("mean_word_length"),
-            )
-            .when(
-                symbol_ratio(t) > config.MAX_SYMBOL_RATIO,
-                F.lit("symbol_ratio"),
-            )
-            .when(
-                ellipsis_count(t) / wc > config.MAX_ELLIPSIS_PER_WORD,
-                F.lit("ellipsis_ratio"),
-            )
-            .when(
-                eng & (stopwords < config.MIN_STOPWORD_COUNT),
-                F.lit("stopword_ratio"),
-            )
-            .when(
-                dup_line_fraction(t) > config.MAX_DUP_LINE_FRACTION,
-                F.lit("dup_line_fraction"),
-            )
-            .otherwise(F.lit(None).cast("string"))
+        return _gate_cascade(
+            mojibake_count(t), wc, mwl, symbol_ratio(t), ellipsis_count(t),
+            stopwords, dup_line_fraction(t), eng,
         )
 
     return bind_once(c, _reason)
@@ -272,8 +278,8 @@ def heuristic_reason_and_pnum(
     by the caller from the langid UDF output, timeliness from the
     timestamp column).
 
-    Why it exists (r8): gates.decide computed heuristic_reason AND
-    quality_score_col as two separate expression trees — Catalyst has
+    Why it exists (r8): gates.decide computed the gate cascade AND
+    the quality score as two separate expression trees — Catalyst has
     no CSE across them, so the word-run regex, mojibake regex,
     symbol translate and line split each ran TWICE per document
     (measured sf1.0: full decide 1.19 s vs 0.80 s for the sum of its
@@ -282,15 +288,13 @@ def heuristic_reason_and_pnum(
     derive from it. The score needs symr/moji/dupf for every row
     anyway, so the eager struct wastes nothing.
 
-    Term order and arithmetic mirror quality_score_col / the labeler
+    Term order and arithmetic mirror the labeler
     (core.gates.quality_score) exactly: left-associated
     completeness→consistency→uniqueness→accuracy weighted sum, so
-    (pnum + validity*w)/den is bit-identical to the old composition.
+    (pnum + validity*w)/den is bit-identical to it.
     NULL text is treated as '' for ALL terms — matching the labeler's
-    ``text = text or ''`` (the old quality_score_col's
-    least(1.0, NULL) quirk rated a NULL text's completeness 1.0
-    where the labeler rates it 0.0; no fixture carries NULL text, and
-    the labeler is the parity contract for this path)."""
+    ``text = text or ''`` (the labeler is the parity contract for
+    this path; tests/test_exprs_parity.py sends NULL text through)."""
     c0 = F.coalesce(c, F.lit(""))
     eng = F.lit(english) if isinstance(english, bool) else english
 
@@ -317,30 +321,9 @@ def heuristic_reason_and_pnum(
     def _from(s: Column) -> Column:
         wc = s["wc"]
         mwl = F.when(wc > 0, s["letters"] / wc).otherwise(F.lit(0.0))
-        reason = (
-            F.when(s["moji"] > 0, F.lit("garbled_encoding"))
-            .when(wc < config.MIN_WORDS, F.lit("too_short"))
-            .when(
-                (mwl < config.MEAN_WORD_LEN_MIN)
-                | (mwl > config.MEAN_WORD_LEN_MAX),
-                F.lit("mean_word_length"),
-            )
-            .when(
-                s["symr"] > config.MAX_SYMBOL_RATIO, F.lit("symbol_ratio")
-            )
-            .when(
-                s["ell"] / wc > config.MAX_ELLIPSIS_PER_WORD,
-                F.lit("ellipsis_ratio"),
-            )
-            .when(
-                eng & (s["stop"] < config.MIN_STOPWORD_COUNT),
-                F.lit("stopword_ratio"),
-            )
-            .when(
-                s["dupf"] > config.MAX_DUP_LINE_FRACTION,
-                F.lit("dup_line_fraction"),
-            )
-            .otherwise(F.lit(None).cast("string"))
+        reason = _gate_cascade(
+            s["moji"], wc, mwl, s["symr"], s["ell"], s["stop"], s["dupf"],
+            eng,
         )
         completeness = F.least(
             F.lit(1.0), wc / F.lit(float(config.MIN_WORDS))
@@ -361,20 +344,6 @@ def heuristic_reason_and_pnum(
     return bind_once(c0, _outer)
 
 
-def token_set_hits(c: Column, words: tuple[str, ...]) -> Column:
-    """Count whitespace-split lowercase tokens that are in `words`.
-
-    Used by the stopword-langid: regex `\\b` is deliberately avoided
-    because its word-char definition differs between Python re
-    (unicode) and Java/RE2 (ASCII) for words like 'più'. A split+filter
-    is identical in all three engines.
-    """
-    toks = F.split(F.lower(c), r"\s+", -1)
-    return F.size(
-        F.filter(toks, lambda x: x.isin(*words))
-    ).cast("long")
-
-
 def stopword_langid(c: Column) -> Column:
     """SQL-expressible language ID: argmax of per-language stopword
     token hits, alphabetical tie-break, 'und' when all zero. The
@@ -384,7 +353,7 @@ def stopword_langid(c: Column) -> Column:
     (bind_once): the naive when-chain re-inlined every language's
     split+filter AND the max into every branch — O(n_langs²)
     tokenizations per document. r8: the TOKENIZATION is also bound
-    once — the per-language token_set_hits each re-split the text, so
+    once — the per-language hit counts each re-split the text, so
     every document was tokenized n_langs times for one token array
     (sf1.0 paired, expression-level: 0.381 → 0.313 s median); the
     per-language work is now just the membership filter over the

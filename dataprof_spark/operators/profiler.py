@@ -625,36 +625,6 @@ def _infer_type(f_, row: dict, total: int) -> str:
     return "string"
 
 
-def profiles_to_df(spark, profiles: list[ColumnProfile]) -> DataFrame:
-    """Flatten to a metrics-table DataFrame (report sink S12)."""
-    import json
-
-    rows = [
-        (
-            p.name,
-            p.spark_type,
-            p.inferred_type,
-            p.total_count,
-            p.null_count,
-            p.distinct_count,
-            p.distinct_is_approximate,
-            p.distinct_confidence,
-            json.dumps(p.stats, default=str),
-            json.dumps(p.top_values, default=str),
-            ",".join(p.flags),
-        )
-        for p in profiles
-    ]
-    return spark.createDataFrame(
-        rows,
-        "name string, spark_type string, inferred_type string, "
-        "total_count long, null_count long, distinct_count long, "
-        "distinct_is_approximate boolean, distinct_confidence string, "
-        "stats string, "
-        "top_values string, flags string",
-    )
-
-
 def correlations(df: DataFrame, cols: list[str] | None = None) -> dict:
     """Pearson correlation matrix over numeric columns in ONE agg job
     (all n·(n−1)/2 `corr` aggregates fuse under codegen — no per-pair

@@ -63,12 +63,6 @@ def importance(df: DataFrame, weight_col: str, threshold: float) -> DataFrame:
     return df.filter(F.col(weight_col) >= threshold)
 
 
-def stratified_fraction(df: DataFrame, key_col: str,
-                        fractions: dict, seed: int = config.SEED) -> DataFrame:
-    """Per-stratum fractional sample (Spark-native sampleBy)."""
-    return df.sampleBy(key_col, fractions, seed)
-
-
 def progressive(
     df: DataFrame,
     numeric_cols: list[str],

@@ -56,22 +56,8 @@ def mark_exact_duplicates(
         kept.join(groups, "__fp")
         .filter(F.col(url_col) != F.col("__canonical_url"))
         .select(F.col(url_col))
-        .withColumn("__exact_dup", F.lit(True))
     )
-    return (
-        decisions.join(losers, url_col, "left")
-        .withColumns(
-            {
-                # losers are by construction previously-kept docs
-                "keep": F.col("keep") & F.col("__exact_dup").isNull(),
-                "drop_reason": F.when(
-                    F.col("__exact_dup").isNotNull(),
-                    F.lit("exact_duplicate"),
-                ).otherwise(F.col("drop_reason")),
-            }
-        )
-        .drop("__exact_dup")
-    )
+    return _demote(decisions, losers, url_col, "exact_duplicate")
 
 
 def mark_near_duplicates(
@@ -106,22 +92,28 @@ def mark_near_duplicates(
         kept, id_col=url_col, text_col=text_col,
         threshold=threshold, n_perm=n_perm, n_bands=n_bands,
     )
-    losers = pairs.select(
-        F.col("id_b").alias(url_col)
-    ).distinct().withColumn("__near_dup", F.lit(True))
+    losers = pairs.select(F.col("id_b").alias(url_col)).distinct()
+    return _demote(decisions, losers, url_col, "near_duplicate")
+
+
+def _demote(
+    decisions: DataFrame, losers: DataFrame, url_col: str, reason: str
+) -> DataFrame:
+    """Left-join the loser urls back onto the full decisions
+    table and demote them: keep=false, drop_reason=reason."""
+    marked = losers.withColumn("__dup", F.lit(True))
     return (
-        decisions.join(losers, url_col, "left")
+        decisions.join(marked, url_col, "left")
         .withColumns(
             {
                 # losers are by construction previously-kept docs
-                "keep": F.col("keep") & F.col("__near_dup").isNull(),
+                "keep": F.col("keep") & F.col("__dup").isNull(),
                 "drop_reason": F.when(
-                    F.col("__near_dup").isNotNull(),
-                    F.lit("near_duplicate"),
+                    F.col("__dup").isNotNull(), F.lit(reason)
                 ).otherwise(F.col("drop_reason")),
             }
         )
-        .drop("__near_dup")
+        .drop("__dup")
     )
 
 

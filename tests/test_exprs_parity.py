@@ -86,15 +86,61 @@ def test_symbol_count_nonascii_whitespace_parity(spark):
     assert ts.symbol_count("a b") == 1
 
 
-def test_heuristic_reason_parity(sdf):
+def _crlf(text: str) -> str:
+    """The same document with CRLF line breaks: existing lines keep
+    their content, single-line text is wrapped every 8 words."""
+    if "\n" in text:
+        return text.replace("\n", "\r\n")
+    ws = text.split(" ")
+    return "\r\n".join(" ".join(ws[i:i + 8]) for i in range(0, len(ws), 8))
+
+
+# Input classes no fixture carries: NULL, empty,
+# whitespace-only and CRLF text (a CRLF variant of every fixture row,
+# so each gate class is also seen with \r\n breaks).
+EDGE_ROWS = [
+    ("edge://null-en", None, "en"),
+    ("edge://null-de", None, "de"),
+    ("edge://empty", "", "en"),
+    ("edge://spaces", "   ", "en"),
+    ("edge://ws-mixed", " \t\n \r\n\f", "de"),
+] + [
+    (f"crlf:{r['url']}", _crlf(r["text"]), r["lang"]) for r in ROWS
+]
+
+
+def test_heuristic_reason_parity(spark):
+    """Both native entry points of the ONE gate cascade — the
+    per-branch heuristic_reason (doc_gates) and the fused gate+score
+    struct (gates.decide) — equal the labeler's cascade on the fixture
+    rows and the edge rows."""
+    from dataprof_spark import config
     from dataprof_spark.core import gates as pygates
     from dataprof_spark.operators import gates as sgates
 
-    got = _collect(
-        sdf, sgates.heuristic_reason_col("text", "lang")
+    rows = [(r["url"], r["text"], r["lang"]) for r in ROWS] + EDGE_ROWS
+    df = spark.createDataFrame(rows, "url string, text string, lang string")
+    fused = exprs.heuristic_reason_and_pnum(
+        F.col("text"),
+        english=F.col("lang") == "en",
+        weights=config.QUALITY_WEIGHTS,
     )
-    for r in ROWS:
-        expect = pygates.heuristic_reason(
-            r["text"], english=(r["lang"] == "en")
-        )
-        assert got[r["url"]] == expect, (r["_class"], r["text"][:80])
+    got = {
+        r["url"]: (r["lazy"], r["fused"])
+        for r in df.select(
+            "url",
+            sgates.heuristic_reason_col("text", "lang").alias("lazy"),
+            fused["reason"].alias("fused"),
+        ).collect()
+    }
+    assert len(got) == len(rows)
+    expected = {}
+    for url, text, lang in rows:
+        expect = pygates.heuristic_reason(text, english=(lang == "en"))
+        expected[url] = expect
+        assert got[url] == (expect, expect), (url, (text or "")[:80])
+    # non-vacuous: NULL/blank text drops as too_short, and the CRLF
+    # rows pass and trip every gate
+    assert {expected[u] for u, _, _ in EDGE_ROWS[:5]} == {"too_short"}
+    crlf = {expected[u] for u, _, _ in EDGE_ROWS[5:]}
+    assert crlf == {None, *config.DROP_REASONS[:7]}, crlf
